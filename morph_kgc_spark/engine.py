@@ -54,7 +54,7 @@ def materialize(spark: SparkSession,
         rules = assign_mapping_partitions(rules)
 
     # plan construction is driver-side eager, so the contextvar scope
-    # covers every percent_encode_col call the compiler makes
+    # covers every IRI-template render the compiler makes
     with safe_encoding_context(safe_percent_encoding):
         return materialize_rules(spark, rules, registry, distinct=distinct,
                                  na_values=tuple(na_values))

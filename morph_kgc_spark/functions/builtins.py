@@ -391,9 +391,13 @@ def example_to_upper_case_url(url=None, **kw) -> Column:
 
 @bif(IDLAB + "toUpperCaseURL")
 def to_upper_case_url(url) -> Column:
-    from morph_kgc_spark.functions.encoding import percent_encode_col
+    from morph_kgc_spark.functions.encoding import _SAFE_CHARS
+    from morph_kgc_spark.functions.sqlexpr import percent_encode_replacements
 
-    return percent_encode_col(F.upper(_as_col(url)))
+    out = F.url_encode(F.upper(_as_col(url)))
+    for search, repl in percent_encode_replacements(_SAFE_CHARS.get()):
+        out = F.replace(out, F.lit(search), F.lit(repl))
+    return out
 
 
 @bif(IDLAB + "concat")

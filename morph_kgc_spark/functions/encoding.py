@@ -6,16 +6,17 @@ src/morph_kgc/materializer.py:127-144):
 1. IRI template references are percent-encoded with ``falcon.uri.encode_value``
    — semantically ``urllib.parse.quote(value, safe='')``: every byte of the
    UTF-8 encoding is escaped except RFC-3986 *unreserved*
-   (ALPHA / DIGIT / ``-._~``). Implemented here as an Arrow-batched pandas
-   UDF (no per-row Python in the plan; vectorization happens inside the
-   batch).
+   (ALPHA / DIGIT / ``-._~``).
 
 2. Literal lexical forms get N-Triples escaping in the reference's exact
-   replacement order: ``\\  \\n  \\t  \\b  \\f  \\r  "  '``. Implemented as
-   a chain of native ``F.replace`` calls — stays inside whole-stage codegen.
+   replacement order: ``\\  \\n  \\t  \\b  \\f  \\r  "  '``.
 
-Both have pure-Python twins (``percent_encode_py`` / ``ntriples_escape_py``)
-for byte-equality tests and driver-side constant folding.
+The Spark side of both is rendered as SQL strings by
+:mod:`morph_kgc_spark.functions.sqlexpr` (a native ``url_encode`` /
+``replace`` chain that stays inside whole-stage codegen). This module
+holds the pure-Python references (``percent_encode_py`` /
+``ntriples_escape_py``) for byte-equality tests and driver-side constant
+folding, plus the ``safe_percent_encoding`` context.
 """
 
 from __future__ import annotations
@@ -24,11 +25,8 @@ from contextlib import contextmanager
 from contextvars import ContextVar
 from urllib.parse import quote
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 
 def percent_encode_py(value: str) -> str:
@@ -42,31 +40,7 @@ def percent_encode_py(value: str) -> str:
     return quote(value, safe="")
 
 
-def ntriples_escape_py(value: str) -> str:
-    """N-Triples escape in the reference's exact order (materializer.py:144)."""
-    return (
-        value.replace("\\", "\\\\")
-        .replace("\n", "\\n")
-        .replace("\t", "\\t")
-        .replace("\b", "\\b")
-        .replace("\f", "\\f")
-        .replace("\r", "\\r")
-        .replace('"', '\\"')
-        .replace("'", "\\'")
-    )
-
-
-@pandas_udf(StringType())
-def percent_encode_udf(s: pd.Series) -> pd.Series:
-    """Arrow-batched percent-encoding (IRI-safe template expansion)."""
-    # str-accessor-free map over the batch: quote() is C-accelerated and the
-    # batch transfer is Arrow; this is the vectorized slow-path the
-    # input_hint allows (no per-row Python *in the plan*).
-    return s.map(lambda v: quote(v, safe="") if v is not None else None)
-
-
-# characters needing %-encoding appear rarely in IRIs built from keys; this
-# fast-path predicate lets the compiler skip the UDF for all-safe columns.
+# N-Triples escapes in the reference's exact order (materializer.py:144)
 _NT_ESCAPES = [
     ("\\", "\\\\"),
     ("\n", "\\n"),
@@ -79,33 +53,17 @@ _NT_ESCAPES = [
 ]
 
 
-def ntriples_escape_col(col: Column) -> Column:
-    """N-Triples escaping as a native replace chain (codegen-friendly)."""
+def ntriples_escape_py(value: str) -> str:
+    """N-Triples escape in the reference's exact order (materializer.py:144)."""
     for search, repl in _NT_ESCAPES:
-        col = F.replace(col, F.lit(search), F.lit(repl))
-    return col
-
-
-def make_percent_encode_udf(safe: str):
-    """UDF factory for ``safe_percent_encoding`` (reference config
-    config.py:228: quote() with user-supplied safe characters instead of
-    falcon's encode-everything default, materializer.py:128-130).
-
-    Only used as a fallback for non-ASCII safe characters; the common
-    path is the pure-JVM expression in :func:`percent_encode_col`.
-    """
-
-    @pandas_udf(StringType())
-    def _enc(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: quote(v, safe=safe) if v is not None else None)
-
-    return _enc
+        value = value.replace(search, repl)
+    return value
 
 
 # contextvar threading for the safe_percent_encoding config key: the
-# compiler builds Column trees driver-side, so materialize() wraps plan
-# construction in `safe_encoding_context` and every percent_encode_col
-# call sees the configured safe characters without 8 layers of kwargs.
+# compiler renders terms driver-side, so materialize() wraps plan
+# construction in `safe_encoding_context` and every IRI-template render
+# sees the configured safe characters without 8 layers of kwargs.
 _SAFE_CHARS: ContextVar[str | None] = ContextVar("safe_percent_chars", default=None)
 
 
@@ -116,43 +74,6 @@ def safe_encoding_context(safe: str | None):
         yield
     finally:
         _SAFE_CHARS.reset(token)
-
-
-def percent_encode_col(col: Column, safe: str | None = None) -> Column:
-    """Percent-encode a column for IRI position — pure JVM, codegen-friendly.
-
-    ``java.net.URLEncoder`` (behind ``F.url_encode``) differs from
-    ``urllib.parse.quote(v, safe='')`` in exactly three ways, each fixable
-    with a post-replace that cannot collide with encoder output:
-
-    - space → ``+`` (we want ``%20``): any original ``+`` was encoded to
-      ``%2B``, so surviving ``+`` is always a space;
-    - ``*`` left bare (we want ``%2A``): no ``%XX`` sequence contains
-      ``*``, so every surviving ``*`` is an original asterisk;
-    - ``~`` → ``%7E`` (RFC-3986 unreserved, we keep it): a literal
-      ``%7E`` in the input becomes ``%257E``, so ``%7E`` is unambiguous.
-
-    Both encoders UTF-8-encode then emit uppercase hex, so the chain is
-    byte-identical to the reference's falcon ``encode_value``
-    (materializer.py:132) — verified by a Hypothesis property test.
-
-    ``safe`` (reference safe_percent_encoding mode) post-decodes the
-    user's extra safe characters; non-ASCII safe chars fall back to the
-    Arrow UDF.
-    """
-    if safe is None:
-        safe = _SAFE_CHARS.get()
-    if safe and not safe.isascii():
-        return make_percent_encode_udf(safe)(col)
-    out = F.url_encode(col)
-    out = F.replace(out, F.lit("+"), F.lit("%20"))
-    out = F.replace(out, F.lit("*"), F.lit("%2A"))
-    out = F.replace(out, F.lit("%7E"), F.lit("~"))
-    for ch in dict.fromkeys(safe or ""):
-        if ch in "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789_.-~":
-            continue  # never encoded in the first place
-        out = F.replace(out, F.lit("%%%02X" % ord(ch)), F.lit(ch))
-    return out
 
 
 def remove_non_printable_py(value: str) -> str:
@@ -171,20 +92,3 @@ def remove_non_printable_col(col: Column) -> Column:
     """Column twin of ``remove_non_printable_py`` (reference
     only_write_printable_characters, utils.py) — pure JVM regex."""
     return F.regexp_replace(col, _NON_PRINTABLE_RE, "")
-
-
-def natural_mapping_col(col: Column, datatype: str | None) -> Column:
-    """Natural Mapping of SQL values (R2RML §10.2; materializer.py:133-144).
-
-    booleans lower-cased; xsd:dateTime ``' '``→``'T'``; xsd:integer
-    truncated of any ``.0`` tail via double→long round-trip.
-    """
-    from morph_kgc_spark import model as M
-
-    if datatype == M.XSD_BOOLEAN:
-        return F.lower(col)
-    if datatype == M.XSD_DATETIME:
-        return F.replace(col, F.lit(" "), F.lit("T"))
-    if datatype == M.XSD_INTEGER:
-        return col.cast("double").cast("long").cast("string")
-    return col

@@ -32,7 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from morph_kgc_spark import model as M
-from morph_kgc_spark.plans.compiler import _ref_col
+from morph_kgc_spark.functions.sqlexpr import sql_str
+from morph_kgc_spark.plans.compiler import _ref_col, _term_sql
 
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_LIST = RDF + "List"
@@ -45,27 +46,24 @@ RDF_NIL = f"<{RDF}nil>"
 RDF_TYPE = f"<{RDF}type>"
 
 
-def _value_term(val: Column, termtype: Optional[str], datatype: Optional[str] = None) -> Column:
-    """Wrap a gathered value in its N-Triples lexical form.
+def _value_terms(termtype: Optional[str],
+                 datatype: Optional[str] = None) -> Column:
+    """The ``vals`` array with each gathered value in its N-Triples
+    lexical form — one SQL lambda over the compiler's term renderer: IRI
+    values render like a template reference (percent-encoded under the
+    configured safe characters), anything else as a literal.
 
-    ``termtype=None`` means the column already holds a full lexical term
-    (e.g. a pre-built ``<iri>``) — used when values are whole IRIs that
-    must not be percent-encoded again.
+    ``termtype=None`` means the values already are full lexical terms
+    (e.g. pre-built ``<iri>``s) that must not be percent-encoded again.
     """
-    from morph_kgc_spark.functions.encoding import (
-        natural_mapping_col,
-        ntriples_escape_col,
-        percent_encode_col,
-    )
-
-    if termtype is None:
-        return val
+    term = "v"
     if termtype == M.IRI:
-        return F.concat(F.lit("<"), percent_encode_col(val), F.lit(">"))
-    out = F.concat(F.lit('"'), ntriples_escape_col(natural_mapping_col(val, datatype)), F.lit('"'))
-    if datatype:
-        out = F.concat(out, F.lit(f"^^<{datatype}>"))
-    return out
+        term = _term_sql(M.TermMap(M.TEMPLATE, "{v}", M.IRI))
+    elif termtype is not None:
+        term = _term_sql(M.TermMap(M.REFERENCE, "v", M.LITERAL), datatype=datatype)
+        if datatype:
+            term = f"concat({term}, {sql_str(f'^^<{datatype}>')})"
+    return F.expr(f"transform(vals, v -> {term})")
 
 
 def gather_triples(df: DataFrame,
@@ -125,10 +123,7 @@ def gather_triples(df: DataFrame,
     def bnode(i: Column | int) -> Column:
         return F.concat(F.lit("_:g"), gkey, F.lit("_"), F.lit(i) if isinstance(i, int) else i)
 
-    terms = F.transform(
-        F.col("vals"),
-        lambda v: _value_term(v, value_termtype, value_datatype),
-    )
+    terms = _value_terms(value_termtype, value_datatype)
 
     if gather_as == RDF_LIST:
         head_node = F.when(n == 0, F.lit(RDF_NIL)) \
@@ -240,8 +235,7 @@ def gather_triples_per_row(df: DataFrame,
     named = F.col("__head").isNotNull()
     head_node = F.when(named, F.col("__head")) \
                  .otherwise(F.concat(F.lit("_:g"), F.col("__rk")))
-    terms = F.transform(
-        F.col("vals"), lambda v: _value_term(v, value_termtype, value_datatype))
+    terms = _value_terms(value_termtype, value_datatype)
 
     def t(s: Column, p: Column, o: Column) -> Column:
         return F.struct(s.alias("s"), p.alias("p"), o.alias("o"))
@@ -305,9 +299,3 @@ def gather_triples_per_row(df: DataFrame,
             .select(F.col("t.s").alias("subject"),
                     F.col("t.p").alias("predicate"),
                     F.col("t.o").alias("object")))
-
-
-# NOTE: the former grouped gather_subject_triples was deleted in round 3 —
-# subject-position gathers always compile through gather_triples_per_row
-# (scalar refs wrap as 1-element arrays), so a second implementation with
-# divergent semantics had no remaining call path.

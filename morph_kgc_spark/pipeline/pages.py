@@ -2,7 +2,7 @@
 
 Pages (url, warc_ts, html, text, lang) → vectorized text extraction →
 mention detection → two-stage entity linking (broadcast alias-dictionary
-candidate generation, Arrow-batched scoring) → RML template expansion →
+candidate generation, JVM scoring) → RML template expansion →
 (subject, predicate, object) triples with set semantics.
 
 Input shape per BASELINE.json input_hint. In production the source is an
@@ -16,9 +16,9 @@ Scale design:
 - generation/extraction/mention-detection are per-row (no shuffle);
 - the alias dictionary is broadcast (candidate generation never shuffles
   the pages side);
-- per-mention scoring is an Arrow-batched pandas UDF (no per-row Python);
-- the page↔entity join skew (head entities) is handled by the
-  deterministic salted join from operators/joins.py when linking back;
+- per-mention scoring is a JVM expression (``array_intersect`` over token
+  splits) and the best entity per (url, alias) is one row_number window —
+  no Python in the plan;
 - final dedup = partition-local dropDuplicates + hash-partitioned
   distinct (compiler pipeline).
 """

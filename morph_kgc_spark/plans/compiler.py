@@ -11,9 +11,11 @@ mirroring the reference's per-rule pandas dataflow
 Catalyst gets column pruning, NOT-NULL pushdown, and join strategy for free.
 
 Scale notes (100 TB target):
-- templates become ``concat`` trees of native expressions → whole-stage
-  codegen; the percent-encode pandas UDF only fires on rows that actually
-  contain reserved characters (see functions/encoding.percent_encode_col);
+- every term renders as ONE Spark SQL string (``concat`` trees of native
+  ``url_encode`` / ``replace`` expressions, functions/sqlexpr.py) → one
+  py4j round-trip per term and whole-stage codegen, no Python in the
+  plan; FNML executions are projected into columns first and then
+  render like references;
 - referencing-object-map joins go through operators/joins.py which
   broadcasts small parents and can salt skewed keys;
 - set semantics = partition-local dedup at the scan (dropDuplicates is
@@ -23,19 +25,14 @@ Scale notes (100 TB target):
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Callable, Iterable, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from morph_kgc_spark import model as M
-from morph_kgc_spark.functions.encoding import (
-    _SAFE_CHARS,
-    natural_mapping_col,
-    ntriples_escape_col,
-    ntriples_escape_py,
-    percent_encode_col,
-)
+from morph_kgc_spark.functions.encoding import _SAFE_CHARS, ntriples_escape_py
 from morph_kgc_spark.functions.sqlexpr import (
     natural_mapping_sql,
     ntriples_escape_sql,
@@ -146,14 +143,6 @@ _ABSOLUTE_IRI_RE = "^[A-Za-z][A-Za-z0-9+.-]*:"
 _INVALID_IRI_CHARS_RE = '[\\x00-\\x20<>"{}|\\\\^`]'
 
 
-def _resolve_base(term: Column, base_iri: str) -> Column:
-    """Row-level base-IRI resolution (R2RML: relative IRIs resolve
-    against the base; whether a value is relative depends on the row —
-    RMLTC0019a has absolute and relative values in one column)."""
-    return F.when(term.rlike(_ABSOLUTE_IRI_RE), term) \
-            .otherwise(F.concat(F.lit(base_iri), term))
-
-
 def _resolve_base_sql(term: str, base_iri: str) -> str:
     return (f"(CASE WHEN {term} RLIKE {sql_str(_ABSOLUTE_IRI_RE)} "
             f"THEN {term} ELSE concat({sql_str(base_iri)}, {term}) END)")
@@ -171,20 +160,25 @@ def _wrap_sql(term: str, termtype: str) -> str:
 
 def _term_sql(tm: M.TermMap, *, datatype: Optional[str] = None,
               col_prefix: str = "", wrap: bool = True,
-              base_iri: str = "") -> str | None:
-    """SQL-string form of :func:`compile_term`, or ``None`` when the
-    term needs the Column path (FNML executions; non-ASCII safe chars).
+              base_iri: str = "") -> str:
+    """Render a term map as ONE Spark SQL expression producing the
+    N-Triples lexical form.
 
-    One ``F.expr`` on this string parses to the IDENTICAL Catalyst tree
-    the Column builders produce, for one py4j round-trip instead of
-    dozens (the round-4 ~1.3 s/flagship plan-build constant; see
-    functions/sqlexpr.py). Semantics are compile_term's, including the
-    reference parity notes there.
+    Reference: materializer.py:106-163 (_materialize_template) — constants
+    and literal template parts are emitted verbatim; only *reference values*
+    are percent-encoded (IRI position) or natural-mapped + escaped (literal
+    position); then the whole term is termtype-wrapped. ``base_iri``
+    (document-driven mappings only) resolves relative IRI results.
+
+    EXECUTION term maps are not rendered here: :func:`project_executions`
+    turns them into references to projected columns first.
     """
     if tm.kind == M.CONSTANT:
+        # driver-side constant folding (materializer.py:919-923)
         return sql_str(_wrap_py(tm.value, tm.termtype) if wrap else tm.value)
     if tm.kind == M.EXECUTION:
-        return None
+        raise ValueError(f"function execution {tm.value!r} must be projected "
+                         "into a column before rendering (project_executions)")
 
     template = tm.value if tm.kind == M.TEMPLATE else "{" + tm.value + "}"
     parts, refs = _template_parts(template)
@@ -195,8 +189,12 @@ def _term_sql(tm: M.TermMap, *, datatype: Optional[str] = None,
         e = sql_ident(col_prefix + ref)
         if tm.termtype == M.IRI and tm.kind == M.TEMPLATE:
             e = percent_encode_sql(e, _SAFE_CHARS.get())
-            if e is None:
-                return None
+        # plain reference in IRI position: assumed a correct IRI, NOT
+        # percent-encoded and NOT trimmed — the reference only strips
+        # FNML execution outputs (materializer.py:186); plain reference
+        # values are emitted verbatim, so whitespace-padded cells flow
+        # to the invalid-IRI data-error filter instead of being silently
+        # repaired (deliberate parity choice, round-4 advice)
         elif tm.termtype == M.LITERAL:
             e = ntriples_escape_sql(natural_mapping_sql(e, datatype))
         pieces.append(e)
@@ -208,80 +206,9 @@ def _term_sql(tm: M.TermMap, *, datatype: Optional[str] = None,
     return _wrap_sql(term, tm.termtype) if wrap else term
 
 
-def compile_term(tm: M.TermMap, *, datatype: Optional[str] = None,
-                 col_prefix: str = "", wrap: bool = True,
-                 base_iri: str = "") -> Column:
-    """Compile a term map to a Column producing the N-Triples lexical form.
-
-    Reference: materializer.py:106-163 (_materialize_template) — constants
-    and literal template parts are emitted verbatim; only *reference values*
-    are percent-encoded (IRI position) or natural-mapped + escaped (literal
-    position); then the whole term is termtype-wrapped. ``base_iri``
-    (document-driven mappings only) resolves relative IRI results.
-
-    Non-execution terms render as ONE SQL string parsed by a single
-    ``F.expr`` (:func:`_term_sql`) — same Catalyst tree, ~30× fewer py4j
-    round-trips; executions and non-ASCII safe-char modes keep the
-    Column path below.
-    """
-    if tm.kind == M.CONSTANT:
-        # driver-side constant folding (materializer.py:919-923)
-        return F.lit(_wrap_py(tm.value, tm.termtype) if wrap else tm.value)
-
-    if tm.kind != M.EXECUTION:
-        s = _term_sql(tm, datatype=datatype, col_prefix=col_prefix,
-                      wrap=wrap, base_iri=base_iri)
-        if s is not None:
-            return F.expr(s)
-
-    if tm.kind == M.EXECUTION:
-        # FNML function execution (reference: fnml_executer.py:69-122,
-        # _materialize_fnml_execution materializer.py:165-197): the
-        # function output is treated like a reference value — encoded /
-        # natural-mapped / escaped per termtype, then wrapped.
-        col, explodes = compile_execution(tm, col_prefix=col_prefix)
-        if explodes:
-            raise ValueError(
-                f"list-returning function {tm.value!r} must be exploded at "
-                "the rule level (object position only)")
-        if tm.termtype == M.IRI:
-            # "IRI values are assumed correct and NOT percent encoded",
-            # only trimmed (reference: materializer.py:183-186)
-            col = F.trim(col)
-            if base_iri:
-                col = _resolve_base(col, base_iri)
-        elif tm.termtype == M.LITERAL:
-            col = natural_mapping_col(col, datatype)
-            col = ntriples_escape_col(col)
-        return _wrap_col(col, tm.termtype) if wrap else col
-
-    template = tm.value if tm.kind == M.TEMPLATE else "{" + tm.value + "}"
-    parts, refs = _template_parts(template)
-
-    pieces: list[Column] = []
-    for part, ref in zip(parts, refs):
-        if part:
-            pieces.append(F.lit(part))
-        col = _ref_col(col_prefix + ref)
-        if tm.termtype == M.IRI and tm.kind == M.TEMPLATE:
-            col = percent_encode_col(col)
-        # plain reference in IRI position: assumed a correct IRI, NOT
-        # percent-encoded and NOT trimmed — the reference only strips
-        # FNML execution outputs (materializer.py:186); plain reference
-        # values are emitted verbatim, so whitespace-padded cells flow
-        # to the invalid-IRI data-error filter instead of being silently
-        # repaired (deliberate parity choice, round-4 advice)
-        elif tm.termtype == M.LITERAL:
-            col = natural_mapping_col(col, datatype)
-            col = ntriples_escape_col(col)
-        pieces.append(col)
-    if parts[-1]:
-        pieces.append(F.lit(parts[-1]))
-
-    term = pieces[0] if len(pieces) == 1 else F.concat(*pieces)
-    if tm.termtype == M.IRI and base_iri:
-        term = _resolve_base(term, base_iri)
-    return _wrap_col(term, tm.termtype) if wrap else term
+def compile_term(tm: M.TermMap, **kw) -> Column:
+    """:func:`_term_sql` as a Column: one ``F.expr``, one py4j round-trip."""
+    return F.expr(_term_sql(tm, **kw))
 
 
 def compile_execution(tm: M.TermMap, col_prefix: str = ""):
@@ -318,54 +245,89 @@ def _wrap_py(value: str, termtype: str) -> str:
     return value
 
 
-def _wrap_col(col: Column, termtype: str) -> Column:
-    if termtype == M.IRI:
-        return F.concat(F.lit("<"), col, F.lit(">"))
-    if termtype == M.BLANK_NODE:
-        return F.concat(F.lit("_:"), col)
-    if termtype == M.LITERAL:
-        return F.concat(F.lit('"'), col, F.lit('"'))
-    return col
+def _object_sql(rule: M.Rule, col_prefix: str = "") -> str:
+    """Object term + optional @lang / ^^<datatype> suffix.
 
-
-def _object_sql(rule: M.Rule, col_prefix: str = "") -> str | None:
-    """SQL-string form of :func:`_object_column` (``None`` → Column path)."""
+    Reference: materializer.py:213-228.
+    """
     datatype_iri = (rule.datatype.value
                     if rule.datatype is not None and rule.datatype.kind == M.CONSTANT
                     else None)
     obj = _term_sql(rule.object, datatype=datatype_iri,
                     col_prefix=col_prefix, base_iri=rule.base_iri)
-    if obj is None:
-        return None
     if rule.language is not None:
-        lang = _term_sql(rule.language, wrap=False)
-        return None if lang is None else f"concat({obj}, '@', {lang})"
+        return f"concat({obj}, '@', {_term_sql(rule.language, wrap=False)})"
     if rule.datatype is not None:
         dt = _term_sql(rule.datatype.but(termtype=M.IRI))
-        return None if dt is None else f"concat({obj}, '^^', {dt})"
+        return f"concat({obj}, '^^', {dt})"
     return obj
 
 
 def _object_column(rule: M.Rule, col_prefix: str = "") -> Column:
-    """Object term + optional @lang / ^^<datatype> suffix.
+    return F.expr(_object_sql(rule, col_prefix))
 
-    Reference: materializer.py:213-228.
+
+def project_executions(base: DataFrame, rule: M.Rule, obj_prefix: str = "",
+                       subj_prefix: str = "") -> tuple[DataFrame, M.Rule]:
+    """Project every FNML execution of ``rule`` into a column of ``base``
+    and rewrite it as a REFERENCE to that column, so the SQL renderer
+    encodes / natural-maps / escapes a function result like any reference
+    value (reference: fnml_executer.py:69-122, materializer.py:165-197).
+
+    IRI outputs are "assumed correct and NOT percent encoded", only
+    trimmed (materializer.py:183-186) — trimmed here, so the invalid-IRI
+    filter sees the emitted value. A list-returning object explodes into
+    one row per element, untrimmed (fnml_executer.py:120). A projected
+    column carries the prefix (``obj_prefix`` / ``subj_prefix`` for the
+    joined object / quoted-subject side) of the position it serves.
     """
-    s = _object_sql(rule, col_prefix)
-    if s is not None:
-        return F.expr(s)
-    datatype_iri = (rule.datatype.value
-                    if rule.datatype is not None and rule.datatype.kind == M.CONSTANT
-                    else None)
-    obj = compile_term(rule.object, datatype=datatype_iri,
-                       col_prefix=col_prefix, base_iri=rule.base_iri)
-    if rule.language is not None:
-        lang = compile_term(rule.language, wrap=False)
-        obj = F.concat(obj, F.lit("@"), lang)
-    elif rule.datatype is not None:
-        dt = compile_term(rule.datatype.but(termtype=M.IRI))
-        obj = F.concat(obj, F.lit("^^"), dt)
-    return obj
+    cols: dict[str, Column] = {}
+    exploded: list[Column] = []
+
+    def proj(tm, prefix="", iri=False, explode=False):
+        if tm is None or tm.kind != M.EXECUTION:
+            return tm
+        col, explodes = compile_execution(tm, col_prefix=prefix)
+        if explodes and explode:
+            exploded.append(col)
+            return tm.but(kind=M.REFERENCE, value="__fnml", args=())
+        if explodes:
+            raise ValueError(
+                f"list-returning function {tm.value!r} must be exploded at "
+                "the rule level (object position only)")
+        name = f"__fnml{len(cols)}"
+        cols[prefix + name] = F.trim(col) if iri or tm.termtype == M.IRI else col
+        return tm.but(kind=M.REFERENCE, value=name, args=())
+
+    def quoted(r, prefix):
+        # a quoted rule renders subject/predicate/object over `prefix`,
+        # its language/datatype unprefixed (_quoted_triple_sql)
+        return None if r is None else r.but(
+            subject=proj(r.subject, prefix), predicate=proj(r.predicate, prefix),
+            object=proj(r.object, prefix), language=proj(r.language),
+            datatype=proj(r.datatype, iri=True),
+            quoted_subject=quoted(r.quoted_subject, prefix),
+            quoted_object=quoted(r.quoted_object, prefix))
+
+    join_prefix = ("parent_" if rule.parent_source is not None
+                   and rule.join_conditions else "")
+    out = rule.but(
+        subject=proj(rule.subject), predicate=proj(rule.predicate),
+        object=proj(rule.object, explode=True), graph=proj(rule.graph),
+        language=proj(rule.language), datatype=proj(rule.datatype, iri=True),
+        parent_subject=proj(rule.parent_subject, join_prefix),
+        quoted_subject=quoted(rule.quoted_subject, subj_prefix),
+        quoted_object=quoted(rule.quoted_object, obj_prefix),
+        gather_poms=tuple((proj(p), proj(o), proj(dt, iri=True), proj(lang))
+                          for p, o, dt, lang in rule.gather_poms))
+    if rule.gather is not None and rule.gather.head is not None:
+        out = out.but(gather=replace(rule.gather, head=proj(rule.gather.head)))
+    if cols:
+        base = base.withColumns(cols)
+    if exploded:
+        base = base.withColumn("__fnml", F.explode(exploded[0])) \
+                   .na.drop("any", subset=["__fnml"])
+    return base, out
 
 
 def compile_rule(spark: SparkSession, rule: M.Rule,
@@ -433,11 +395,25 @@ def compile_rule(spark: SparkSession, rule: M.Rule,
                                  rule.subject_join_conditions)
         subj_prefix = "parent_"
 
+    # function executions may yield null (e.g. controls_if with no
+    # value_false) — such triples are filtered, not emitted (reference:
+    # built_in_functions.py:194). Only EXECUTION-built positions get the
+    # filter so plain rules keep their exact plans; an exploded object is
+    # null-dropped by the explode itself.
+    executed = [pos for pos in ("subject", "predicate", "object", "graph")
+                if getattr(rule, pos) is not None
+                and getattr(rule, pos).kind == M.EXECUTION]
+    base, rule = project_executions(base, rule, obj_prefix=col_prefix,
+                                    subj_prefix=subj_prefix)
+    executed = [pos for pos in executed if getattr(rule, pos).value != "__fnml"]
+
     # data-error filtering (document-driven rules only): IRI terms built
     # from raw reference/function values may contain characters illegal in
     # IRIs — those rows are omitted, not emitted (R2RML term-generation
     # rules; W3C RMLTC0019b). Template refs are percent-encoded so they
-    # cannot produce invalid characters.
+    # cannot produce invalid characters; function outputs were trimmed by
+    # the projection, so a whitespace-padded but otherwise valid one
+    # passes, while a padded plain reference is a data error.
     if rule.base_iri:
         for tm, prefix in ((rule.subject, subj_prefix),
                            (rule.predicate, ""),
@@ -445,74 +421,43 @@ def compile_rule(spark: SparkSession, rule: M.Rule,
                            (rule.graph, ""),
                            (rule.parent_subject,
                             "parent_" if rule.parent_source is not None else "")):
-            if tm is not None and tm.termtype == M.IRI \
-                    and tm.kind in (M.REFERENCE, M.EXECUTION):
-                raw_sql = None if tm.kind == M.EXECUTION else _term_sql(
-                    tm.but(termtype=""), wrap=False, col_prefix=prefix)
-                if raw_sql is not None:
-                    base = base.where(
-                        f"NOT ({raw_sql} RLIKE "
-                        f"{sql_str(_INVALID_IRI_CHARS_RE)})")
-                    continue
-                raw = compile_term(tm.but(termtype=""), wrap=False,
-                                   col_prefix=prefix)
-                if tm.kind == M.EXECUTION:
-                    # execution outputs ARE trimmed on emission
-                    # (materializer.py:186), so a whitespace-padded but
-                    # otherwise valid value must survive this filter;
-                    # plain references are emitted verbatim and padded
-                    # values are data errors
-                    raw = F.trim(raw)
-                base = base.where(~raw.rlike(_INVALID_IRI_CHARS_RE))
+            if tm is not None and tm.termtype == M.IRI and tm.kind == M.REFERENCE:
+                raw = _term_sql(tm.but(termtype=""), wrap=False,
+                                col_prefix=prefix)
+                base = base.where(
+                    f"NOT ({raw} RLIKE {sql_str(_INVALID_IRI_CHARS_RE)})")
 
     # --- term columns ------------------------------------------------------
     if rule.quoted_subject is not None:
-        subj = _quoted_triple_col(rule.quoted_subject, col_prefix=subj_prefix)
+        subj = _quoted_triple_sql(rule.quoted_subject, col_prefix=subj_prefix)
     else:
-        subj = compile_term(rule.subject, base_iri=rule.base_iri)
+        subj = _term_sql(rule.subject, base_iri=rule.base_iri)
 
-    pred = compile_term(rule.predicate, base_iri=rule.base_iri)
-
-    # list-returning FNML execution in object position → row explode
-    # (reference: fnml_executer.py:120 ``data.explode(fnml_execution)``)
-    if rule.object is not None and rule.object.kind == M.EXECUTION:
-        col, explodes = compile_execution(rule.object, col_prefix="")
-        if explodes:
-            base = base.withColumn("__fnml", F.explode(col)) \
-                       .na.drop("any", subset=["__fnml"])
-            rule = rule.but(object=rule.object.but(
-                kind=M.REFERENCE, value="__fnml", args=()))
+    pred = _term_sql(rule.predicate, base_iri=rule.base_iri)
 
     if rule.quoted_object is not None:
         # with a join condition the quoted rule materializes over ITS OWN
         # source (joined in as parent_); without one it shares the
         # child's rows (reference: materializer.py:925-962)
-        obj = _quoted_triple_col(rule.quoted_object, col_prefix=col_prefix)
+        obj = _quoted_triple_sql(rule.quoted_object, col_prefix=col_prefix)
     elif rule.parent_source is not None and rule.join_conditions:
         # referencing object map: object = parent subject over parent_ cols
-        obj = compile_term(rule.parent_subject, col_prefix="parent_",
-                           base_iri=rule.base_iri)
+        obj = _term_sql(rule.parent_subject, col_prefix="parent_",
+                        base_iri=rule.base_iri)
     elif rule.parent_subject is not None:
         # join-less referencing map after self-join elimination: parent
         # subject map evaluated over the child's own rows
-        obj = compile_term(rule.parent_subject, base_iri=rule.base_iri)
+        obj = _term_sql(rule.parent_subject, base_iri=rule.base_iri)
     else:
-        obj = _object_column(rule, col_prefix="")
+        obj = _object_sql(rule)
 
-    out_cols = [subj.alias("subject"), pred.alias("predicate"), obj.alias("object")]
+    out_cols = [f"{subj} AS subject", f"{pred} AS predicate", f"{obj} AS object"]
     if rule.graph is not None:
-        out_cols.append(compile_term(rule.graph,
-                                     base_iri=rule.base_iri).alias("graph"))
-    out = base.select(*out_cols)
-    # function executions may yield null (e.g. controls_if with no
-    # value_false) — such triples are filtered, not emitted (reference:
-    # built_in_functions.py:194 'this will be filtered when removing
-    # nulls'). Only EXECUTION-built positions get the filter so plain
-    # rules keep their exact plans.
-    for tm, pos in ((rule.subject, "subject"), (rule.predicate, "predicate"),
-                    (rule.object, "object"), (rule.graph, "graph")):
-        if tm is not None and tm.kind == M.EXECUTION:
-            out = out.where(F.col(pos).isNotNull())
+        out_cols.append(
+            f"{_term_sql(rule.graph, base_iri=rule.base_iri)} AS graph")
+    out = base.selectExpr(*out_cols)
+    for pos in executed:
+        out = out.where(F.col(pos).isNotNull())
     return out
 
 
@@ -584,6 +529,8 @@ def _compile_gather_rule(spark: SparkSession, rule: M.Rule,
         all_refs = list(dict.fromkeys(scalar_refs + list(g.references)))
         base = prepare_source(df, all_refs, na_values=na_values, dedup=True,
                               drop_null_subset=scalar_refs)
+        base, rule = project_executions(base, rule)
+        g = rule.gather
         return gather_triples(
             base,
             subject_col=compile_term(rule.subject),
@@ -618,7 +565,8 @@ def _compile_gather_rule(spark: SparkSession, rule: M.Rule,
     base = df.select(*sel)
     for r in required:
         base = base.where(_ref_col(r).isNotNull())
-    base = base.dropDuplicates()
+    base, rule = project_executions(base.dropDuplicates(), rule)
+    g = rule.gather
 
     if len(gv_cols) > 1:
         # multi-reference melt semantics: union of values, dedup,
@@ -648,7 +596,7 @@ def _compile_gather_rule(spark: SparkSession, rule: M.Rule,
         allow_empty=g.allow_empty)
 
 
-def _quoted_triple_col(sub_rule: M.Rule, col_prefix: str = "") -> Column:
+def _quoted_triple_sql(sub_rule: M.Rule, col_prefix: str = "") -> str:
     """RML-star quoted triple ``<< s p o >>``, recursively nested.
 
     Reference: materializer.py:925-962 — with no join condition the
@@ -657,29 +605,6 @@ def _quoted_triple_col(sub_rule: M.Rule, col_prefix: str = "") -> Column:
     Nested quoting (a quoted rule whose own subject/object is quoted,
     RMLSTARTC004a shape) recurses over the same rows.
     """
-    s_sql = _quoted_triple_sql(sub_rule, col_prefix=col_prefix)
-    if s_sql is not None:
-        return F.expr(s_sql)
-    if sub_rule.quoted_subject is not None:
-        s = _quoted_triple_col(sub_rule.quoted_subject, col_prefix=col_prefix)
-    else:
-        s = compile_term(sub_rule.subject, col_prefix=col_prefix,
-                         base_iri=sub_rule.base_iri)
-    p = compile_term(sub_rule.predicate, col_prefix=col_prefix,
-                     base_iri=sub_rule.base_iri)
-    if sub_rule.quoted_object is not None:
-        if sub_rule.join_conditions:
-            raise NotImplementedError(
-                "join condition inside a *nested* quoted map is unsupported")
-        o = _quoted_triple_col(sub_rule.quoted_object, col_prefix=col_prefix)
-    else:
-        o = _object_column(sub_rule, col_prefix=col_prefix)
-    return F.concat(F.lit("<< "), s, F.lit(" "), p, F.lit(" "), o, F.lit(" >>"))
-
-
-def _quoted_triple_sql(sub_rule: M.Rule, col_prefix: str = "") -> str | None:
-    """SQL-string form of :func:`_quoted_triple_col` (``None`` → Column
-    path, e.g. FNML executions inside the quoted map)."""
     if sub_rule.quoted_subject is not None:
         s = _quoted_triple_sql(sub_rule.quoted_subject, col_prefix=col_prefix)
     else:
@@ -694,8 +619,6 @@ def _quoted_triple_sql(sub_rule: M.Rule, col_prefix: str = "") -> str | None:
         o = _quoted_triple_sql(sub_rule.quoted_object, col_prefix=col_prefix)
     else:
         o = _object_sql(sub_rule, col_prefix=col_prefix)
-    if s is None or p is None or o is None:
-        return None
     return f"concat('<< ', {s}, ' ', {p}, ' ', {o}, ' >>')"
 
 

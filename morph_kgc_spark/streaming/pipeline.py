@@ -4,7 +4,7 @@ The reference has no true streaming (its Kafka sink is a one-shot batch
 message, utils.py:300-330). This module goes further, per the brief's
 streaming mandate: the same rule compiler runs over an unbounded pages
 stream — every term-materialization operator is stateless/per-row, so
-the exact batch Column trees apply unchanged to ``readStream`` sources.
+the exact batch term expressions apply unchanged to ``readStream`` sources.
 
 - ``stream_triples``: rules × streaming DataFrame → streaming triples.
   Set semantics caveat: global distinct over an unbounded stream needs
@@ -25,7 +25,12 @@ from pyspark.sql import functions as F
 
 from morph_kgc_spark import model as M
 from morph_kgc_spark.operators.joins import join_child_parent
-from morph_kgc_spark.plans.compiler import compile_term, _object_column, prepare_source
+from morph_kgc_spark.plans.compiler import (
+    _object_column,
+    compile_term,
+    prepare_source,
+    project_executions,
+)
 
 
 def stream_triples(stream_df: DataFrame, rules: list[M.Rule],
@@ -75,6 +80,7 @@ def stream_triples(stream_df: DataFrame, rules: list[M.Rule],
                 base, prepare_source(parent, rule.parent_references),
                 rule.join_conditions, broadcast=True)
             col_prefix = "parent_"
+        base, rule = project_executions(base, rule, obj_prefix=col_prefix)
 
         if col_prefix and rule.parent_subject is not None:
             obj = compile_term(rule.parent_subject, col_prefix=col_prefix)

@@ -184,6 +184,15 @@ def test_quoted_triples_rml_star(spark):
     [r] = compile_rule(spark, outer, reg).collect()
     assert r.object == f'<< <{EX}a> <{EX}p> "b" >>'
 
+    # an FNML execution inside the quoted map renders over the same rows
+    from morph_kgc_spark.functions.builtins import GREL
+
+    upper = M.TermMap(M.EXECUTION, GREL + "toUpperCase", M.LITERAL,
+                      args=(("string", M.TermMap(M.REFERENCE, "c2")),))
+    outer = outer.but(quoted_object=inner.but(object=upper))
+    [r] = compile_rule(spark, outer, reg).collect()
+    assert r.object == f'<< <{EX}a> <{EX}p> "B" >>'
+
 
 def test_quoted_triples_with_join_condition(spark):
     """RML-star quoted map over a DIFFERENT source joined by condition
@@ -213,17 +222,30 @@ def test_quoted_triples_with_join_condition(spark):
         f'<< <{EX}cert/c1> <{EX}score> "95" >>',
     )}
 
+    # an FNML execution inside the quoted map reads the joined-in
+    # parent_ columns too
+    from morph_kgc_spark.functions.builtins import GREL
+
+    upper = M.TermMap(M.EXECUTION, GREL + "toUpperCase", M.LITERAL,
+                      args=(("string", M.TermMap(M.REFERENCE, "id")),))
+    rule = rule.but(quoted_object=quoted.but(object=upper))
+    rows = {tuple(r) for r in compile_rule(spark, rule, reg).collect()}
+    assert rows == {(
+        f"<{EX}person/p1>", f"<{EX}claims>",
+        f'<< <{EX}cert/c1> <{EX}score> "C1" >>',
+    )}
+
 
 def test_safe_percent_encoding_mode(spark):
     """safe_percent_encoding: user-supplied safe chars stay unescaped
     (reference materializer.py:128-130)."""
-    from morph_kgc_spark.functions.encoding import percent_encode_col
+    from morph_kgc_spark.functions.sqlexpr import percent_encode_sql
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame([("a/b c",)], ["v"])
     [r] = df.select(
-        percent_encode_col(F.col("v")).alias("strict"),
-        percent_encode_col(F.col("v"), safe="/").alias("safe_slash"),
+        F.expr(percent_encode_sql("v")).alias("strict"),
+        F.expr(percent_encode_sql("v", safe="/")).alias("safe_slash"),
     ).collect()
     assert r.strict == "a%2Fb%20c"
     assert r.safe_slash == "a/b%20c"

@@ -47,7 +47,7 @@ def test_function_composition(spark):
     assert r.object == '"ana"'
 
 
-def test_function_in_predicate_position(spark):
+def test_function_in_predicate_position_template_arg(spark):
     # RMLFNOTC0004: function builds the predicate IRI
     reg = _reg(spark, pd.DataFrame({"ID": ["1"], "p": ["KNOWS"]}))
     pred = M.TermMap(M.EXECUTION, GREL + "toLowerCase", M.IRI,

@@ -3,7 +3,9 @@
 Covers: na_values / file_path / safe_percent_encoding config threading,
 subject-graph ∪ POM-graph union, datatype→Literal termtype default,
 simhash banding pigeonhole, restart-stable checkpoint lineage, and the
-pure-JVM percent-encode chain's byte parity with urllib.parse.quote.
+pure-JVM percent-encode chain's byte parity with urllib.parse.quote
+(the test names keep the original ``percent_encode_col`` wording; the
+chain is now the SQL renderer ``percent_encode_sql``).
 """
 
 import os
@@ -14,8 +16,9 @@ from pyspark.sql import functions as F
 
 from morph_kgc_spark import materialize, materialize_from_config
 from morph_kgc_spark import model as M
-from morph_kgc_spark.functions.encoding import percent_encode_col
+from morph_kgc_spark.functions.sqlexpr import percent_encode_sql
 from morph_kgc_spark.mapping.parser import parse_mapping
+from morph_kgc_spark.sources.registry import default_registry
 
 EX = "http://example.com/"
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
@@ -25,33 +28,48 @@ NASTY = [
     "héllo wörld", "日本語", "emoji 😀", "a/b?c=d&e#f", "tab\tnl\n",
     "quote\"'", "plus+ +", "~~~", "***", "+++", "%25", "a_b-c.d~e",
     "ünïcödé~*+ %7E%2B", "\x01\x7f", "€", "\U0001F600*~ +x",
+    "%2F", "a%20b",
 ]
+
+
+def _encoded(df, safe=None):
+    return df.select("v", F.expr(percent_encode_sql("v", safe)).alias("e"))
 
 
 def test_percent_encode_col_matches_quote(spark):
     """The url_encode+fixup chain is byte-identical to quote(v, safe='')."""
     df = spark.createDataFrame([(s,) for s in NASTY], ["v"])
-    rows = df.select("v", percent_encode_col(F.col("v")).alias("e")).collect()
-    for r in rows:
+    for r in _encoded(df).collect():
         assert r.e == quote(r.v, safe=""), r.v
 
 
 def test_percent_encode_col_safe_mode_matches_quote(spark):
+    # "%/" and "% ": `%` is decoded last, so an encoded "%2F" stays "%2F";
+    # "ü/": quote() ignores non-ASCII safe characters
     df = spark.createDataFrame([(s,) for s in NASTY], ["v"])
-    for safe in ("/", "/:#", "+* ~%"):
-        rows = df.select(
-            "v", percent_encode_col(F.col("v"), safe=safe).alias("e")).collect()
-        for r in rows:
+    for safe in ("/", "/:#", "+* ~%", "%/", "% ", "ü/"):
+        for r in _encoded(df, safe).collect():
             assert r.e == quote(r.v, safe=safe), (safe, r.v)
 
 
 def test_percent_encode_is_jvm_side(spark):
-    """No python worker in the default-encode plan (hot-path requirement)."""
-    df = spark.createDataFrame([("a b",)], ["v"])
-    plan = df.select(percent_encode_col(F.col("v")))
-    explained = plan._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in explained
-    assert "BatchEvalPython" not in explained
+    """No python worker in the encode plan (hot-path requirement), also
+    for a materialized mapping with non-ASCII safe characters."""
+    df = spark.createDataFrame([(s,) for s in NASTY], ["v"])
+    reg = default_registry()
+    reg.register("nasty", df)
+    rule = M.Rule(source=M.Source("df", "nasty"),
+                  subject=M.TermMap(M.TEMPLATE, EX + "s/{v}", M.IRI),
+                  predicate=M.TermMap(M.CONSTANT, EX + "p", M.IRI),
+                  object=M.TermMap(M.CONSTANT, "o", M.LITERAL))
+    out = materialize(spark, [rule], registry=reg, safe_percent_encoding="ü/")
+    # "" is a default NULL lexical form: its row drops
+    assert sorted(r.subject for r in out.collect()) == sorted(
+        {f"<{EX}s/{quote(v, safe='ü/')}>" for v in NASTY if v})
+    for plan in (_encoded(df), out):
+        explained = plan._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in explained
+        assert "BatchEvalPython" not in explained
 
 
 # ---------------------------------------------------------------------------

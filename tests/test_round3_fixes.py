@@ -89,7 +89,8 @@ def test_whitespace_padded_iri_reference_is_data_error(spark):
     only FNML execution outputs are stripped (materializer.py:186) — so
     this engine never repairs padding; the invalid-IRI filter drops the
     row instead of emitting a whitespace-containing IRI term.
-    (Round-4 advice reversed round 3's trim-and-emit behavior here.)"""
+    (Round-4 advice reversed round 3's trim-and-emit behavior here.)
+    An FNML execution's IRI output, by contrast, is trimmed and kept."""
     from morph_kgc_spark import model as M
     from morph_kgc_spark.sources.registry import default_registry
 
@@ -108,6 +109,16 @@ def test_whitespace_padded_iri_reference_is_data_error(spark):
     objs = sorted(r.object for r in out.collect())
     # rows 1 (padded) and 2 (internal space) are data errors, dropped
     assert objs == [f"<{EX}plain>"]
+
+    # the execution counterpart: a function's IRI output IS trimmed on
+    # emission, so the padded row is kept; the internal space still drops
+    from morph_kgc_spark.functions.builtins import GREL
+
+    fn = M.TermMap(M.EXECUTION, GREL + "toLowerCase", M.IRI,
+                   args=(("string", M.TermMap(M.REFERENCE, "URL")),))
+    out = materialize(spark, [rule.but(object=fn)], registry=reg)
+    objs = sorted(r.object for r in out.collect())
+    assert objs == [f"<{EX}ok>", f"<{EX}plain>"]
 
 
 def test_load_udfs_supports_bif_protocol(tmp_path):
