@@ -693,13 +693,12 @@ def _kg_profile_triples(spark, sf_dir):
     written ONCE; its oracle twin is oracles._profile_triples_sql.
 
     Round 7: ONE materialize() call over all four rules instead of
-    three separate calls unioned. The mapping partitioner assigns each
-    rule its own disjoint group (distinct predicates), so the per-group
-    distincts — and therefore the output multiset — are identical to
-    the three-call form (oracle hashes pinned), in one plan with one
-    registry. (Persisting the sources was tried and measured SLOWER:
-    the cache materializes every column of orders, defeating the
-    parquet scan's column pruning.)
+    three separate calls unioned. The rules emit disjoint predicates,
+    so its single distinct — and therefore the output multiset — is
+    identical to the three-call form (oracle hashes pinned), in one
+    plan with one registry. (Persisting the sources was tried and
+    measured SLOWER: the cache materializes every column of orders,
+    defeating the parquet scan's column pruning.)
     """
     _utc(spark)
     reg = default_registry()
@@ -975,8 +974,9 @@ def q_events_hourly_rollup(spark, sf_dir):
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full KG materialization as ONE plan: all rules compiled into a
-    single union-of-branches DAG with per-partition-group distincts —
-    the engine's real execution shape (one job, not one per rule).
+    single union of map-side branches and one distinct — the engine's
+    real execution shape (one job, not one per rule; one shuffle of the
+    output triples plus one dedup per join parent).
 
     Sources persist once per job (several rules share customer/orders;
     Spark re-executes identical scan subtrees per union branch otherwise

@@ -8,12 +8,12 @@ distributed Spark DataFrame program:
   to a flat rule table (`morph_kgc_spark.model.Rule`), mirroring the
   reference's `rml_df` (reference: src/morph_kgc/mapping/mapping_constants.py:13-23);
 - data plane: each rule becomes a *lazy* DataFrame expression pipeline
-  (scan → project refs → null-drop → dedup → join → template expansion →
-  termtype wrapping), compiled by `morph_kgc_spark.plans.compiler`;
+  (scan → project refs → null-drop → join a deduped parent → template
+  expansion → termtype wrapping), compiled by
+  `morph_kgc_spark.plans.compiler`;
 - output: a DataFrame(subject, predicate, object[, graph]) of N-Triples
-  lexical terms with set semantics (union + distinct, pruned by the
-  mapping-partition disjointness analysis, reference:
-  src/morph_kgc/mapping/mapping_partitioner.py:159-358).
+  lexical terms with set semantics: the union of every rule's branch
+  and ONE distinct (reference: src/morph_kgc/__init__.py:49-57).
 
 Everything in the hot path is either a native Column expression
 (whole-stage-codegen) or an Arrow-batched pandas UDF — no per-row Python.

@@ -2,8 +2,8 @@
 
 The Spark analogue of ``morph_kgc.materialize`` (reference:
 src/morph_kgc/__init__.py:38-83): parse + normalize the mapping document on
-the driver, compile to the flat rule table, partition the rules, then build
-ONE lazy DataFrame for the whole knowledge graph. Instead of the
+the driver, compile to the flat rule table, then build ONE lazy DataFrame
+for the whole knowledge graph, deduplicated by one distinct. Instead of the
 reference's process pool (one OS process per mapping group,
 __init__.py:45-53), every rule contributes a branch to a single Spark job
 DAG — executors are the parallel unit and the scheduler sees the whole
@@ -50,6 +50,8 @@ def materialize(spark: SparkSession,
     else:
         rules = list(mapping)
 
+    # the labels no longer shape the plan (materialize_rules runs one
+    # distinct); the call stays only because benchmark tracing wraps it
     if partition_rules:
         rules = assign_mapping_partitions(rules)
 

@@ -184,6 +184,7 @@ class Rule:
     gather_poms: tuple = ()
 
     triples_map_id: str = ""
+    # plans/partitioner.py group label; the compiler no longer reads it
     mapping_partition: str = ""
     # document @base: relative IRI-position data values resolve against it
     # at materialization time (R2RML term-generation rules; row-dependent)

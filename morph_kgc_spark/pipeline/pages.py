@@ -19,8 +19,9 @@ Scale design:
 - per-mention scoring is a JVM expression (``array_intersect`` over token
   splits) and the best entity per (url, alias) is one row_number window —
   no Python in the plan;
-- final dedup = partition-local dropDuplicates + hash-partitioned
-  distinct (compiler pipeline).
+- final dedup = one hash-partitioned distinct over the two linked
+  rules (compiler pipeline); the per-page metadata rules are unique by
+  construction and skip it.
 """
 
 from __future__ import annotations
@@ -306,19 +307,17 @@ def pipeline_triples(spark: SparkSession, pages: DataFrame,
                datatype=M.TermMap(M.CONSTANT, M.XSD_DATETIME, M.IRI)),
     ]
     from morph_kgc_spark.plans.compiler import compile_rule
-    from morph_kgc_spark.plans.partitioner import assign_mapping_partitions
 
     from morph_kgc_spark.operators.cache import own
 
-    out = materialize_rules(spark, assign_mapping_partitions(linked_rules),
-                            reg)
+    out = materialize_rules(spark, linked_rules, reg)
     # the metadata branches are DISTINCT-FREE: url is unique per
     # generated page (the generator keys every page by its row id), so
     # one (subject, constant-predicate, object) triple per row can never
-    # duplicate — the per-group distinct exchange over 2M rendered
-    # triples bought nothing (guide §2.4 "a distinct on data that is
-    # already unique"). Their subject templates also cannot collide with
-    # the linked rules' outputs (different predicates).
+    # duplicate — a distinct exchange over 2M rendered triples would buy
+    # nothing (guide §2.4 "a distinct on data that is already unique").
+    # They also cannot collide with the linked rules' outputs (different
+    # predicates).
     for r in meta_rules:
         out = out.unionAll(compile_rule(spark, r, reg, dedup_source=False))
     return own(out, [linked, pages_slim])

@@ -18,9 +18,10 @@ Scale notes (100 TB target):
   render like references;
 - referencing-object-map joins go through operators/joins.py which
   broadcasts small parents and can salt skewed keys;
-- set semantics = partition-local dedup at the scan (dropDuplicates is
-  already a partial+final hash aggregate) + one global distinct, pruned per
-  mapping-partition group (plans/partitioner.py).
+- set semantics = ONE distinct over the union of every rule's branch:
+  the rules render map-side (no scan-level dedup except on join parents)
+  and the distinct's partial aggregate collapses duplicates in the same
+  map task, before the single shuffle of the output triples.
 """
 
 from __future__ import annotations
@@ -336,21 +337,19 @@ def compile_rule(spark: SparkSession, rule: M.Rule,
                  dedup_source: bool = True) -> DataFrame:
     """Compile one rule into a DataFrame(subject, predicate, object[, graph]).
 
-    ``dedup_source=False`` skips the scan-level dropDuplicates: when a
-    set-semantics distinct runs downstream anyway, dedup(refs) → render →
-    distinct and render → distinct produce the same set, and the early
-    dedup is a pure extra shuffle (rendered terms are functions of the
-    refs). materialize_rules passes False exactly for simple projection
-    rules inside distinct groups; JOIN rules keep the pre-join dedup —
-    duplicate keys would multiply join output before the distinct could
-    collapse it (the reference preprocess dedups for the same reason,
-    materializer.py:37-55).
+    ``dedup_source=False`` skips the dropDuplicates of the rule's own
+    (child) source: when a set-semantics distinct runs downstream anyway,
+    dedup(refs) → [join] → render → distinct and [join] → render →
+    distinct produce the same set, and the early dedup is a pure extra
+    shuffle (rendered terms are functions of the refs). Duplicate child
+    rows only add join output linearly. Join PARENTS keep their dedup
+    either way: a duplicated parent row multiplies every matching child
+    row, quadratically when both sides share a low-cardinality key (the
+    reference preprocess dedups every source, materializer.py:37-55).
+    materialize_rules passes False whenever it runs the distinct.
     """
     if rule.gather is not None:
         return _compile_gather_rule(spark, rule, load_source, na_values)
-    if rule.parent_source is not None or rule.join_conditions \
-            or rule.subject_join_conditions:
-        dedup_source = True
 
     # quoted map with join condition: the quoted rule's own source is
     # the join parent unless the caller set one explicitly (must happen
@@ -628,34 +627,21 @@ def materialize_rules(spark: SparkSession, rules: list[M.Rule],
                       na_values: Iterable[str] = DEFAULT_NA_VALUES) -> DataFrame:
     """Union all rules' triples with set semantics.
 
-    Rules that share a ``mapping_partition`` label are distinct-ed together;
-    groups proven disjoint by the partitioner are unioned WITHOUT a second
-    global distinct — the reference's signature optimization
-    (mapping_partitioner.py:159-358) re-expressed as shuffle pruning.
+    Every rule compiles to a map-side branch (no child-source dedup) and
+    the union runs ONE ``distinct()`` — the reference's set union over
+    its mapping groups (__init__.py:49-57) as a single shuffle of the
+    output triples. ``distinct=False`` dedups every source instead and
+    runs no distinct.
     """
     if not rules:
         raise ValueError("no rules to materialize")
 
     n_graph = any(r.graph is not None for r in rules)
-    frames: dict[str, DataFrame] = {}
-    for i, rule in enumerate(rules):
-        # each rule's branch ends in a distinct (per-group or global)
-        # whenever set semantics are on — the scan-level dedup is then a
-        # redundant extra exchange for projection-only rules
+    out = None
+    for rule in rules:
         df = compile_rule(spark, rule, load_source, na_values=na_values,
                           dedup_source=not distinct)
         if n_graph and "graph" not in df.columns:
             df = df.withColumn("graph", F.lit(None).cast("string"))
-        key = rule.mapping_partition or f"__rule_{i}"
-        frames[key] = frames[key].unionAll(df) if key in frames else df
-
-    parts = list(frames.values())
-    if distinct:
-        parts = [p.distinct() for p in parts]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    # cross-group distinct only needed when partition labels were absent
-    if distinct and len(frames) > 1 and any(k.startswith("__rule_") for k in frames):
-        out = out.distinct()
-    return out
+        out = df if out is None else out.unionAll(df)
+    return out.distinct() if distinct else out

@@ -4,8 +4,9 @@ The reference's signature optimization (SWJ paper; reference:
 src/morph_kgc/mapping/mapping_partitioner.py:18-33, 159-358) groups rules
 whose emitted triples *provably cannot collide*, so each group can be
 deduplicated independently and unioned without a global distinct. There it
-saves cross-process set unions; on Spark it prunes the final global
-``distinct()`` shuffle — at 10^12 triples the dominant cost.
+saves cross-process set unions. On Spark the labels no longer shape the
+plan: ``materialize_rules`` runs one ``distinct()`` over all rules, whose
+partial aggregate already dedups map-side.
 
 Two algorithms:
 

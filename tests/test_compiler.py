@@ -120,10 +120,13 @@ def test_null_rows_dropped(spark):
 
 
 def test_join_condition(spark):
+    # one duplicated child row and one duplicated parent row
     student = pd.DataFrame(
-        {"ID": ["10", "11", "12"], "Name": ["V", "F", "D"], "Sport": ["110", None, "111"]}
+        {"ID": ["10", "11", "12", "10"], "Name": ["V", "F", "D", "V"],
+         "Sport": ["110", None, "111", "110"]}
     )
-    sport = pd.DataFrame({"ID": ["110", "111"], "Name": ["Tennis", "Ski"]})
+    sport = pd.DataFrame({"ID": ["110", "111", "110"],
+                          "Name": ["Tennis", "Ski", "Tennis"]})
     reg = default_registry()
     reg.register("student", spark.createDataFrame(student))
     reg.register("sport", spark.createDataFrame(sport))
@@ -135,11 +138,22 @@ def test_join_condition(spark):
         parent_subject=M.TermMap(M.TEMPLATE, EX + "sport/{ID}", M.IRI),
         join_conditions=(M.JoinCondition(child="Sport", parent="ID"),),
     )
-    rows = {tuple(r) for r in compile_rule(spark, rule, reg).collect()}
-    assert rows == {
+    expected = {
         (f"<{EX}student/10>", f"<{EX}plays>", f"<{EX}sport/110>"),
         (f"<{EX}student/12>", f"<{EX}plays>", f"<{EX}sport/111>"),
     }
+    rows = {tuple(r) for r in compile_rule(spark, rule, reg).collect()}
+    assert rows == expected
+    # set semantics: the child dedup is skipped, the final distinct
+    # collapses the duplicated child row
+    assert {tuple(r) for r in
+            materialize(spark, [rule], registry=reg).collect()} == expected
+    # without the child dedup the parent dedup still stops the duplicated
+    # parent row from multiplying the join output
+    assert compile_rule(spark, rule, reg, dedup_source=False).count() == 3
+    # distinct=False dedups every source, join children included
+    assert materialize(spark, [rule], registry=reg,
+                       distinct=False).count() == 2
 
 
 def test_all_constant_rule(spark):

@@ -170,3 +170,18 @@ def test_per_row_gather_single_exchange(spark, tmp_path):
     assert len(re.findall(r"FileScan json", plan)) == 1, plan
     assert "Union" not in plan, plan
     assert df.count() == 8  # 2 head triples + 3 first + 3 rest
+
+
+def test_flagship_single_triple_shuffle(spark):
+    """Set semantics is ONE distinct over the union of every rule: the
+    flagship's only hash exchange keyed on the output triple is that
+    distinct, and the lineitem child side of the join is not deduped
+    (the exchange would serialize the render into one coalesced
+    partition)."""
+    plan = _executed_plan(entrymod.flagship(spark, SF))
+    keys = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    # a constant predicate may fold into the key as its literal
+    triple = [k for k in keys if k.startswith("subject#")]
+    assert len(triple) == 1, keys
+    assert not [k for k in keys
+                if re.match(r"l_orderkey#\d+, l_linenumber#\d+", k)], keys

@@ -295,6 +295,36 @@ def test_simhash_contraction_parity(spark, monkeypatch):
     assert contracted == direct
 
 
+def test_simhash_count_shortcut_bounds_every_band(spark, monkeypatch):
+    """The corpus-count shortcut may skip the band probe only when
+    n_bands·n·(n−1)/2 candidates stay under the threshold: every band of
+    an all-duplicate corpus pairs all n docs. With the threshold between
+    n·(n−1)/2 and n_bands·n·(n−1)/2 the contracted (dense) path must
+    run."""
+    from morph_kgc_spark.operators import dedup as D
+
+    n, n_bands = 10, 4  # max_hamming 3 → 4 bands
+    docs = spark.createDataFrame([(i, "the same page text") for i in range(n)],
+                                 "doc_id long, text string")
+    pair_bound = n * (n - 1) // 2
+    monkeypatch.setenv("MORPH_KGC_SIMHASH_CONTRACT_MIN_CANDS",
+                       str(pair_bound + 1))
+    assert pair_bound < pair_bound + 1 < n_bands * pair_bound
+
+    modes = []
+    orig = D.dup_clusters
+
+    def recording(*a, dense=None, **k):
+        modes.append(dense)
+        return orig(*a, dense=dense, **k)
+
+    monkeypatch.setattr(D, "dup_clusters", recording)
+    out = _cluster_rows(D.simhash_dup_clusters(docs, "doc_id", "text",
+                                               max_hamming=3))
+    assert modes == [True]
+    assert out == [(i, 0) for i in range(n)]
+
+
 def test_dup_clusters_dense_mode_parity(spark, monkeypatch):
     """dense=True (single-direction edges, both-side per-round
     aggregates) and the dense=None staging decision must yield the

@@ -7,12 +7,15 @@ hash (columns sorted by name, rows sorted, values stringified).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever copy is installed
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 

@@ -2,9 +2,12 @@
 name, oracle coverage, and the first docstring sentence — so coverage
 is auditable at a glance without reading the registry source."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever copy is installed
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -37,7 +40,7 @@ def main() -> None:
         mark = "hash" if name in oracles else "rows"
         lines.append(f"| {i} | `{name}` | {mark} | "
                      f"{first_sentence(fn.__doc__)} |")
-    with open("/root/repo/CATALOG.md", "w") as f:
+    with open(os.path.join(ROOT, "CATALOG.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote CATALOG.md: {len(qs)} queries")
 
